@@ -34,24 +34,34 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *      carries `partitions` fans the scrape out over planned bounds
   *      (`source_partition_bounds` semantics) as N parallel range
   *      queries. All (source × scraper) reads union into ONE plan that
-  *      is executed EXACTLY ONCE per round, spooling raw samples to the
-  *      round's scratch dir — the remote engines never see a second
-  *      query for the same round (the old shape scraped twice: once for
-  *      bodies, once for the manifest counts).
-  *   4. ENCODE + PUBLISH, EXACTLY-ONCE — every spooled sample becomes a
-  *      Prometheus remote-write frame
-  *      ([[graft.operators.PromWire.encodeSamples]]), grouped into one
-  *      snappy-compressed WriteRequest body per (source, metric) —
-  *      `proto.Marshal` + `snappy.Encode`. Bodies and manifest are
-  *      written with the repo's own write-audit-publish discipline
-  *      (stage → row-count audit → atomic rename into `round=N`), and
-  *      the state snapshots (registry, watermarks) advance strictly
-  *      AFTER publish: a crash anywhere mid-round leaves the watermarks
-  *      unmoved, and the restarted round's publish REPLACES its own
-  *      `round=N` dirs instead of appending — no double-pushed bodies,
-  *      ever (spec-proven by killing the loop between publish and
-  *      advance). The sigv4-signed HTTP POST stays out of scope (AWS
+  *      is executed EXACTLY ONCE per round, into an eager in-memory
+  *      lineage cut (`localCheckpoint`) — the remote engines never see
+  *      a second query for the same round (the old shape scraped twice:
+  *      once for bodies, once for the manifest counts). One aggregate
+  *      over the cut, keyed (source, scraper, metric name), yields every
+  *      count the round needs: per-family sample counts and max(ts_sec)
+  *      for the watermarks and the manifest, and the distinct
+  *      (source, metric) pairs the body audit expects.
+  *   4. ENCODE + PUBLISH — every cut sample becomes a Prometheus
+  *      remote-write frame ([[graft.operators.PromWire.encodeSamples]]),
+  *      grouped into one snappy-compressed WriteRequest body per
+  *      (source, metric) — `proto.Marshal` + `snappy.Encode`. Bodies and
+  *      manifest are written with the repo's own write-audit-publish
+  *      discipline (stage → footer row-count audit → atomic rename into
+  *      `round=N`). The sigv4-signed HTTP POST stays out of scope (AWS
   *      infra); the bodies parquet is the push boundary.
+  *   5. ADVANCE, EXACTLY-ONCE — the state snapshots (registry,
+  *      watermarks) advance strictly AFTER publish (the registry only
+  *      when the source set changed): a crash anywhere mid-round leaves
+  *      the watermarks unmoved, and the restarted round's publish
+  *      REPLACES its own `round=N` dirs instead of appending — no
+  *      double-pushed bodies, ever (spec-proven by killing the loop
+  *      between publish and advance). The in-memory cut keeps that
+  *      guarantee: a cut block cannot be recomputed, so losing one fails
+  *      the round instead of silently re-querying the sources, and the
+  *      failed round's unmoved watermarks make the next round retry the
+  *      same range. The cut is unpersisted when the round ends, crashed
+  *      or not.
   *
   * Round state (registry snapshot, per-(source, scraper) watermarks) and outputs
   * (manifest, bodies — both partitioned by round) live under a work
@@ -60,7 +70,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * than driver-memory state. At scale each source's scrape is a
   * distributed (optionally split) read; nothing here collects data rows
   * to the driver (the registry collect is config rows — the reference
-  * holds the same list in memory).
+  * holds the same list in memory — and the round's stats collect has one
+  * row per published body).
   */
 object CollectorLoop {
 
@@ -181,32 +192,50 @@ object CollectorLoop {
   def scrapersFor(engine: String): Seq[(String, String)] =
     scrapersFor(engine, null)
 
-  private def exists(spark: SparkSession, path: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case _: Throwable => false }
+  /** Does `path` exist? Only a path that is not there reads as `false`;
+    * any other FS error propagates and fails the round. Reading an
+    * unreadable state dir as "fresh workDir" would restart the
+    * watermarks at Long.MinValue and double-push every body. */
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   private def fsOf(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fsOf(spark, path).delete(p, true); ()
+  /** State snapshot schemas, given explicitly so no read infers them
+    * from the parquet footers. */
+  private val RegistrySchema = "source_id STRING, engine STRING"
+  private val WatermarkSchema = "source_id STRING, scraper STRING, watermark BIGINT"
+
+  /** Rows in the parquet files directly under `dir`, summed from their
+    * footers — the metadata Spark's `count()` over the dir reads, without
+    * a job. Hidden files (`_SUCCESS`, `.crc`) are skipped. */
+  private def stagedRowCount(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    fsOf(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
   }
 
   /** Stage → audit → atomic publish of one round's slice of `table`:
-    * write under an invisible dot-dir, count-audit the staged files
-    * against the expected row count, then rename into `round=N`.
+    * write under an invisible dot-dir, audit the staged files' row count
+    * against the expected one, then rename into `round=N`.
     * A replayed round DELETES its own published dir first — outputs are
     * per-round idempotent, so a crash-and-restart can never append a
     * second copy (the `sink_write_audit_publish` discipline). */
-  private def publishRound(spark: SparkSession, table: String, round: Long,
+  private[graft] def publishRound(spark: SparkSession, table: String, round: Long,
       df: DataFrame, expectRows: Long): Unit = {
     val stagedPath = s"$table/.staging_round_$round"
     df.write.mode("overwrite").parquet(stagedPath)
-    val got = spark.read.parquet(stagedPath).count()
+    val got = stagedRowCount(spark, stagedPath)
     if (got != expectRows)
       sys.error(s"audit failed for $table round $round: staged $got != expected $expectRows")
     val fs = fsOf(spark, table)
@@ -244,9 +273,10 @@ object CollectorLoop {
 
     // 2. diff against the previous registry snapshot
     val regPath = s"$workDir/registry"
+    val regExists = exists(spark, regPath)
     val prev: Map[String, String] =
-      if (exists(spark, regPath))
-        spark.read.parquet(regPath).select("source_id", "engine")
+      if (regExists)
+        spark.read.schema(RegistrySchema).parquet(regPath)
           .as[(String, String)].collect().toMap
       else Map.empty
     val cur: Map[String, String] = enrolled
@@ -265,7 +295,7 @@ object CollectorLoop {
     val wmPath = s"$workDir/watermarks"
     val storedWm: Map[(String, String), Long] =
       if (exists(spark, wmPath))
-        spark.read.parquet(wmPath).as[(String, String, Long)].collect()
+        spark.read.schema(WatermarkSchema).parquet(wmPath).as[(String, String, Long)].collect()
           .map { case (id, fam, w) => (id, fam) -> w }.toMap
       else Map.empty
     val failedScrapes = scala.collection.mutable.Set[(String, String)]()
@@ -316,7 +346,9 @@ object CollectorLoop {
                 "upperBound" -> (b.getLong(1) + 1).toString))
             }
           rows.filter(col("ts_sec") > wm) // pushes into the JDBC WHERE / scan
-            .select(lit(id).as("source_id"), lit(engine).as("engine"),
+            // engine from `cur`, one per source id: a source enrolled
+            // twice still yields one body per (source, metric)
+            .select(lit(id).as("source_id"), lit(cur(id)).as("engine"),
               lit(family).as("scraper"), col("name").cast("string").as("name"),
               col("val").cast("double").as("val"), col("ts_sec").cast("long").as("ts_sec"))
         }
@@ -331,127 +363,146 @@ object CollectorLoop {
     // union every (source × scraper) into ONE plan — the reference
     // scrapes concurrently (sync.WaitGroup); here concurrency is
     // Spark's scheduling of the union's leaves — and execute it
-    // EXACTLY ONCE into the round's spool: every derived output
-    // (bodies, manifest counts, watermarks) reads the spool, so the
+    // EXACTLY ONCE into an eager in-memory cut: every derived output
+    // (bodies, manifest counts, watermarks) reads the cut, so the
     // remote engines are queried once per round no matter how many
-    // consumers the round has
+    // consumers the round has. A bare localCheckpoint, not
+    // graft.Checkpoints.cut: under the reliable-checkpoint flag that
+    // would `checkpoint()`, which recomputes the plan and queries every
+    // source a second time.
     val scrapedRows = scraped
       .reduceOption(_ unionByName _)
       .getOrElse(Seq.empty[(String, String, String, String, Double, Long)]
         .toDF("source_id", "engine", "scraper", "name", "val", "ts_sec"))
-    val spool = s"$workDir/.spool_round_$round"
-    scrapedRows.write.mode("overwrite").parquet(spool)
-    val spooled = spark.read.parquet(spool)
+    val cut = scrapedRows.localCheckpoint(eager = true)
+    try {
+      // ONE stats pass over the cut, keyed (source, scraper, name): one
+      // row per scraped body (|bodies|-bounded on the driver). Per-family
+      // count and max ts_sec feed each family's watermark, the manifest
+      // summary and the self-observability series; the distinct
+      // (source, name) pairs are the bodies audit's expected count. Names
+      // are deduplicated across families, never summed per family: the
+      // `..._innodb_cmp_` and `..._innodb_cmp_mem_` prefixes overlap.
+      val stats: Array[(String, String, String, Long, Long)] = cut
+        .groupBy(col("source_id"), col("scraper"), col("name"))
+        .agg(count(lit(1)).as("n"), max(col("ts_sec")).as("mx"))
+        .as[(String, String, String, Long, Long)]
+        .collect()
+      val famCounts: Map[(String, String), (Long, Long)] = stats
+        .groupBy { case (id, fam, _, _, _) => (id, fam) }
+        .map { case (k, rows) => k -> (rows.map(_._4).sum, rows.map(_._5).max) }
 
-    // per-(source, scraper) stats off the spool (|sources × families|-
-    // bounded): each family's count and max ts_sec feed ITS OWN
-    // watermark, the manifest summary, and the self-observability series
-    val famCounts: Map[(String, String), (Long, Long)] = spooled
-      .groupBy(col("source_id"), col("scraper"))
-      .agg(count(lit(1)).as("n"), max(col("ts_sec")).as("mx"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
+      // 4a. encode bodies: cut samples PLUS the collector's own
+      // self-observability family per enrolled source — `up` (1 iff every
+      // scraper family of the source constructed and read cleanly this
+      // round, the reserved Prometheus health series) and
+      // `scrape_samples_scraped` (rows this round). Their timestamp is
+      // the round number — the deterministic analog of scrape wall time.
+      val selfRows: Seq[(String, String, String, String, Double, Long)] =
+        status.toSeq.filter(_._2 != "removed").sortBy(_._1).flatMap { case (id, _) =>
+          val engine = cur.getOrElse(id, "unknown")
+          val up = if (scrapersFor(engine).exists(f => failedScrapes.contains((id, f._1))))
+            0.0 else 1.0
+          val n = famCounts.collect { case ((i, _), (c, _)) if i == id => c }.sum
+          Seq((id, engine, "self", "up", up, round),
+            (id, engine, "self", "scrape_samples_scraped", n.toDouble, round))
+        }
+      val encodeIn = cut.unionByName(
+        selfRows.toDF("source_id", "engine", "scraper", "name", "val", "ts_sec"))
+      // `engine` rides through the encoder (it keeps extra columns) into
+      // the grouping key: a source's engine is fixed within a round, so
+      // the bodies need no join back to the registry
+      val bodiesDf = graft.operators.PromWire.encodeSamples(
+        encodeIn.select(col("name").as("metric_name"),
+          col("source_id").as("event_type"), col("val").as("value"),
+          (col("ts_sec") * 1000L).as("ts_ms"), col("engine")))
+        .groupBy(col("event_type").as("source_id"), col("engine"), col("metric_name"))
+        .agg(count(lit(1)).as("n_series"),
+          expr("""array_join(transform(
+                    array_sort(collect_list(struct(ts_ms, wire_hex))),
+                    x -> x.wire_hex), '')""").as("body_hex"))
+        .selectExpr("source_id", "engine", "metric_name", "n_series",
+          "length(body_hex) div 2 AS body_len",
+          "graft_snappy(unhex(body_hex)) AS body_snappy")
+      val nBodies = (stats.map { case (id, _, name, _, _) => (id, name) }.toSet ++
+        selfRows.map(r => (r._1, r._4))).size.toLong
+      publishRound(spark, s"$workDir/bodies", round, bodiesDf, nBodies)
 
-    // 4a. encode bodies: spooled samples PLUS the collector's own
-    // self-observability family per enrolled source — `up` (1 iff every
-    // scraper family of the source constructed and read cleanly this
-    // round, the reserved Prometheus health series) and
-    // `scrape_samples_scraped` (rows this round). Their timestamp is
-    // the round number — the deterministic analog of scrape wall time.
-    val selfRows: Seq[(String, String, String, String, Double, Long)] =
-      status.toSeq.filter(_._2 != "removed").sortBy(_._1).flatMap { case (id, _) =>
-        val engine = cur.getOrElse(id, "unknown")
-        val up = if (scrapersFor(engine).exists(f => failedScrapes.contains((id, f._1))))
-          0.0 else 1.0
+      // 4b. manifest: per-source summary (old = most-behind family's
+      // stored watermark, new = most-ahead family's post-round watermark,
+      // n = total new rows, plus how many scraper families failed)
+      val manifestRows = status.toSeq.sortBy(_._1).map { case (id, st) =>
+        val engine = cur.getOrElse(id, prev.getOrElse(id, "unknown"))
+        val fams = scrapersFor(engine).map(_._1)
+        val oldWm = fams.map(f => storedWm.getOrElse((id, f), Long.MinValue)).min
         val n = famCounts.collect { case ((i, _), (c, _)) if i == id => c }.sum
-        Seq((id, engine, "self", "up", up, round),
-          (id, engine, "self", "scrape_samples_scraped", n.toDouble, round))
+        val newWm = fams.map(f => famCounts.get((id, f)).map(_._2)
+          .getOrElse(storedWm.getOrElse((id, f), Long.MinValue))).max
+        val nFailed = fams.count(f => failedScrapes.contains((id, f)))
+        (id, engine, st, oldWm, n, newWm, nFailed)
       }
-    val encodeIn = spooled.unionByName(
-      selfRows.toDF("source_id", "engine", "scraper", "name", "val", "ts_sec"))
-    val bodiesDf = graft.operators.PromWire.encodeSamples(
-      encodeIn.select(col("name").as("metric_name"),
-        col("source_id").as("event_type"), col("val").as("value"),
-        (col("ts_sec") * 1000L).as("ts_ms")))
-      .groupBy(col("event_type").as("source_id"), col("metric_name"))
-      .agg(count(lit(1)).as("n_series"),
-        expr("""array_join(transform(
-                  array_sort(collect_list(struct(ts_ms, wire_hex))),
-                  x -> x.wire_hex), '')""").as("body_hex"))
-      .join(cur.toSeq.toDF("source_id", "engine"), Seq("source_id"), "left")
-      .selectExpr("source_id", "engine", "metric_name", "n_series",
-        "length(body_hex) div 2 AS body_len",
-        "graft_snappy(unhex(body_hex)) AS body_snappy")
-    val nBodies = spooled.select(col("source_id"), col("name")).distinct().count() +
-      selfRows.map(r => (r._1, r._4)).distinct.size
-    publishRound(spark, s"$workDir/bodies", round, bodiesDf, nBodies)
+      val manifestDf = manifestRows
+        .toDF("source_id", "engine", "status", "old_watermark", "n_new",
+          "new_watermark", "n_failed_scrapers")
+      publishRound(spark, s"$workDir/manifest", round, manifestDf, manifestRows.size.toLong)
 
-    // 4b. manifest: per-source summary (old = most-behind family's
-    // stored watermark, new = most-ahead family's post-round watermark,
-    // n = total new rows, plus how many scraper families failed)
-    val manifestRows = status.toSeq.sortBy(_._1).map { case (id, st) =>
-      val engine = cur.getOrElse(id, prev.getOrElse(id, "unknown"))
-      val fams = scrapersFor(engine).map(_._1)
-      val oldWm = fams.map(f => storedWm.getOrElse((id, f), Long.MinValue)).min
-      val n = famCounts.collect { case ((i, _), (c, _)) if i == id => c }.sum
-      val newWm = fams.map(f => famCounts.get((id, f)).map(_._2)
-        .getOrElse(storedWm.getOrElse((id, f), Long.MinValue))).max
-      val nFailed = fams.count(f => failedScrapes.contains((id, f)))
-      (id, engine, st, oldWm, n, newWm, nFailed)
+      if (failpoint == "before-advance")
+        sys.error(s"failpoint: crash after publish, before snapshot advance (round $round)")
+
+      // 5. advance snapshots AFTER the publishes: a crash before this
+      // point leaves the watermarks unmoved and the restarted round
+      // replaces its own round=N dirs — exactly-once outputs per round.
+      // An unchanged registry is not rewritten.
+      if (!regExists || cur != prev)
+        cur.toSeq.toDF("source_id", "engine").write.mode("overwrite").parquet(regPath)
+      val newWms = (storedWm ++ famCounts.map { case (k, (_, w)) => k -> w })
+        .filter { case (k @ (id, _), _) => cur.contains(id) || storedWm.contains(k) }
+      newWms.toSeq.map { case ((id, fam), w) => (id, fam, w) }
+        .toDF("source_id", "scraper", "watermark")
+        .write.mode("overwrite").parquet(wmPath)
+
+      manifestDf.withColumn("round", lit(round))
+        .select("round", "source_id", "engine", "status", "old_watermark",
+          "n_new", "new_watermark", "n_failed_scrapers")
+    } finally cut.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+      case _ => ()
     }
-    val manifestDf = manifestRows
-      .toDF("source_id", "engine", "status", "old_watermark", "n_new",
-        "new_watermark", "n_failed_scrapers")
-    publishRound(spark, s"$workDir/manifest", round, manifestDf, manifestRows.size.toLong)
-
-    if (failpoint == "before-advance")
-      sys.error(s"failpoint: crash after publish, before snapshot advance (round $round)")
-
-    // 5. advance snapshots AFTER the publishes: a crash before this
-    // point leaves the watermarks unmoved and the restarted round
-    // replaces its own round=N dirs — exactly-once outputs per round
-    cur.toSeq.toDF("source_id", "engine").write.mode("overwrite").parquet(regPath)
-    val newWms = (storedWm ++ famCounts.map { case (k, (_, w)) => k -> w })
-      .filter { case (k @ (id, _), _) => cur.contains(id) || storedWm.contains(k) }
-    newWms.toSeq.map { case ((id, fam), w) => (id, fam, w) }
-      .toDF("source_id", "scraper", "watermark")
-      .write.mode("overwrite").parquet(wmPath)
-    deleteDir(spark, spool)
-
-    manifestDf.withColumn("round", lit(round))
-      .select("round", "source_id", "engine", "status", "old_watermark",
-        "n_new", "new_watermark", "n_failed_scrapers")
   }
+
+  /** Next round number of `workDir`: one past the largest published
+    * `manifest/round=N` dir, 1 when there is none. A listing, not a
+    * scan of every published slice; dot-dirs (a crashed round's
+    * staging) are not rounds. */
+  private def nextRound(spark: SparkSession, workDir: String): Long = {
+    val manifest = new org.apache.hadoop.fs.Path(s"$workDir/manifest")
+    val dirs =
+      try fsOf(spark, manifest.toString).listStatus(manifest).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val RoundDir = "round=(\\d+)".r
+    dirs.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case RoundDir(n) => n.toLong }
+      .maxOption.fold(1L)(_ + 1L)
+  }
+
+  /** LAMBDA one-shot mode — the reference's other deployment shape
+    * (database-collector.go:233-268 runs one collect per invocation and
+    * exits; the CDK wires it to a schedule). Executes exactly ONE
+    * enumerate → diff → scrape → publish → advance round with no
+    * trigger stream: the round number is recovered from the published
+    * manifest's `round=N` dirs ([[nextRound]]), so consecutive
+    * invocations are incremental exactly like consecutive stream ticks
+    * — watermarks advance, already-pushed rows never re-push, and a
+    * cron/Lambda deployment IS a sequence of runOnce calls over the
+    * same workDir. Returns the round's manifest. */
+  def runOnce(spark: SparkSession, secrets: Seq[String], workDir: String): DataFrame =
+    runRound(spark, secrets, workDir, nextRound(spark, workDir))
 
   /** Wire the loop onto a trigger stream: each tick value is a round
     * number; `secrets` is re-evaluated per round (the reference's
     * RefreshSecrets goroutine). Production: `spark.readStream
     * .format("rate")` with a processing-time trigger; specs: a
     * MemoryStream of round numbers. */
-  /** LAMBDA one-shot mode — the reference's other deployment shape
-    * (database-collector.go:233-268 runs one collect per invocation and
-    * exits; the CDK wires it to a schedule). Executes exactly ONE
-    * enumerate → diff → scrape → publish → advance round with no
-    * trigger stream: the round number is recovered from the published
-    * manifest (max(round) + 1, 1 on a fresh workDir), so consecutive
-    * invocations are incremental exactly like consecutive stream ticks
-    * — watermarks advance, already-pushed rows never re-push, and a
-    * cron/Lambda deployment IS a sequence of runOnce calls over the
-    * same workDir. Returns the round's manifest. */
-  def runOnce(spark: SparkSession, secrets: Seq[String], workDir: String): DataFrame = {
-    val manifestPath = s"$workDir/manifest"
-    val next =
-      if (!exists(spark, manifestPath)) 1L
-      else spark.read.parquet(manifestPath)
-        .agg(org.apache.spark.sql.functions.max(col("round").cast("long")))
-        .head() match {
-          case r if r.isNullAt(0) => 1L
-          case r => r.getLong(0) + 1L
-        }
-    runRound(spark, secrets, workDir, next)
-  }
-
   def stream(ticks: Dataset[Long], secrets: () => Seq[String],
       workDir: String, trigger: Trigger = Trigger.ProcessingTime(0)): DataStreamWriter[Long] =
     ticks.writeStream

@@ -12,6 +12,40 @@ import org.apache.spark.sql.functions._
   * decodable snappy'd WriteRequest. */
 class CollectorLoopSpec extends SparkTestBase {
 
+  // every test's Derby databases and parquet state live under temp base
+  // dirs made by tempBase; each test ends by shutting those databases
+  // down and deleting the dirs, so repeated runs leave nothing behind
+  private val bases = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+
+  private def tempBase(prefix: String): String = {
+    val b = java.nio.file.Files.createTempDirectory(prefix)
+    bases += b
+    b.toString
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally {
+      bases.foreach(cleanUp)
+      bases.clear()
+    }
+
+  /** Shut down every Derby database under `base` (a dir holding
+    * `service.properties`), then delete the tree. */
+  private def cleanUp(base: java.nio.file.Path): Unit = {
+    def walk(): Seq[java.nio.file.Path] = {
+      val s = java.nio.file.Files.walk(base)
+      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toList }
+      finally s.close()
+    }
+    walk().filter(_.getFileName.toString == "service.properties").foreach { f =>
+      // a successful shutdown reports itself as SQLState 08006
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:${f.getParent};shutdown=true")
+      catch { case _: java.sql.SQLException => () }
+    }
+    walk().sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists)
+  }
+
   // minimal independent protobuf wire decoder (same approach as
   // PromWireSpec: written against the public encoding spec)
   private def readVarint(b: Array[Byte], p: Int): (Long, Int) = {
@@ -42,7 +76,7 @@ class CollectorLoopSpec extends SparkTestBase {
       .replaceAll("\n\\s*", "")
 
   test("two rounds on Derby: only new rows, added source detected, bodies decode") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop").toString
+    val base = tempBase("graft_loop")
     val db1 = s"$base/src1"
     val conn = java.sql.DriverManager.getConnection(s"jdbc:derby:$db1;create=true", "u", "p")
     try {
@@ -143,7 +177,7 @@ class CollectorLoopSpec extends SparkTestBase {
   }
 
   test("loop state survives a process restart: a NEW query resumes from the stored watermark") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_rs").toString
+    val base = tempBase("graft_loop_rs")
     val db = s"$base/src"
     val conn = java.sql.DriverManager.getConnection(s"jdbc:derby:$db;create=true", "u", "p")
     try {
@@ -216,7 +250,7 @@ class CollectorLoopSpec extends SparkTestBase {
     "CREATE TABLE processlist_summary (state VARCHAR(64), n_threads INT, captured_sec BIGINT)")
 
   test("per-engine templates: mysql runs all six enabled reference scrapers (and no processlist); bodies label the engine") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_eng").toString
+    val base = tempBase("graft_loop_eng")
     mkDb(s"$base/my", mysqlDdl ++ Seq(
       "INSERT INTO global_status VALUES ('Threads_running', 7.0, 100), ('Uptime', 5000.0, 100)",
       "INSERT INTO global_variables VALUES ('max_connections', 151.0, 100)",
@@ -276,7 +310,7 @@ class CollectorLoopSpec extends SparkTestBase {
   }
 
   test("exactly-once: a crash between publish and snapshot-advance does not double-push bodies") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_xo").toString
+    val base = tempBase("graft_loop_xo")
     val db = s"$base/src"
     mkDb(db, Seq(
       s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)",
@@ -314,7 +348,7 @@ class CollectorLoopSpec extends SparkTestBase {
   }
 
   test("per-family watermarks: a lagging scraper family's late rows are not skipped by a faster family's advance") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_wm").toString
+    val base = tempBase("graft_loop_wm")
     val db = s"$base/my"
     // round 1: global_status has captured up to 100, innodb_cmp only to
     // 90 — the families of ONE source are at different capture points
@@ -355,7 +389,7 @@ class CollectorLoopSpec extends SparkTestBase {
   }
 
   test("a down source does not fail the round: up=0 for it, healthy sources ship, watermark holds for retry") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_dn").toString
+    val base = tempBase("graft_loop_dn")
     val good = s"$base/good"
     mkDb(good, Seq(
       s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)",
@@ -398,7 +432,7 @@ class CollectorLoopSpec extends SparkTestBase {
   }
 
   test("partitioned scrape: bounds-planned split read returns the same rows as the serial read") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_par").toString
+    val base = tempBase("graft_loop_par")
     val db = s"$base/src"
     mkDb(db, Seq(
       s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)",
@@ -468,7 +502,7 @@ class CollectorLoopSpec extends SparkTestBase {
   // -------------------------------------------------- one-shot (Lambda)
 
   test("runOnce: one-shot artifacts equal one loop tick; a second invocation is incremental") {
-    val base = java.nio.file.Files.createTempDirectory("graft_loop_once").toString
+    val base = tempBase("graft_loop_once")
     val db = s"$base/src"
     mkDb(db, Seq(
       s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)",
@@ -520,4 +554,191 @@ class CollectorLoopSpec extends SparkTestBase {
     val once3 = CollectorLoop.runOnce(spark, secrets, workB).head()
     assert(once3.getAs[Long]("n_new") == 0 && once3.getAs[Long]("new_watermark") == 220)
   }
+
+  // ------------------------------------------------------- round shape
+
+  private def metricsDb(path: String, rows: Seq[(String, Double, Long)]): Unit =
+    mkDb(path, Seq(
+      s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)") ++
+      rows.map { case (n, v, t) => s"INSERT INTO ${CollectorLoop.ScrapeTable} VALUES ('$n', $v, $t)" })
+
+  private def insert(path: String, rows: Seq[(String, Double, Long)]): Unit = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$path", "u", "p")
+    try {
+      val st = c.createStatement()
+      rows.foreach { case (n, v, t) =>
+        st.executeUpdate(s"INSERT INTO ${CollectorLoop.ScrapeTable} VALUES ('$n', $v, $t)")
+      }
+      st.close()
+    } finally c.close()
+  }
+
+  /** The SQL executions `body` runs, as the JDBC relations each one reads. */
+  private def executions(body: => Unit): Seq[Seq[String]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    def jdbcOf(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] =
+      qe.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if l.relation.getClass.getSimpleName == "JDBCRelation" => l.relation.toString
+      }
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(jdbcOf(qe))
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = seen.add(jdbcOf(qe))
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  private def spoolDirs(work: String): Seq[String] =
+    Option(new java.io.File(work).list()).toSeq.flatten.filter(_.startsWith(".spool_round_"))
+
+  test("round shape: a steady round runs a pinned number of SQL executions and queries each source once") {
+    val base = tempBase("graft_loop_shape")
+    val (db1, db2) = (s"$base/src1", s"$base/src2")
+    metricsDb(db1, Seq(("m_up", 1.0, 100), ("threads", 7.0, 100)))
+    metricsDb(db2, Seq(("m_up", 1.0, 100)))
+    val secrets = Seq(secret("s1.example.com", db1), secret("s2.example.com", db2))
+    val work = s"$base/work"
+    CollectorLoop.runOnce(spark, secrets, work)
+    insert(db1, Seq(("m_up", 1.0, 200), ("threads", 8.0, 200)))
+    insert(db2, Seq(("m_up", 0.0, 200)))
+
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val steady = executions {
+      val m = CollectorLoop.runOnce(spark, secrets, work).collect()
+      assert(m.map(_.getAs[Long]("n_new")).sum == 3 && m.forall(_.getAs[String]("status") == "kept"))
+    }
+    // enumerate, registry read, watermark read, scrape cut, stats,
+    // bodies write, manifest write, watermark write (the registry is
+    // unchanged, so not rewritten), the returned manifest's collect
+    assert(steady.size == 9, s"SQL executions of a steady round: ${steady.size}")
+    val reads = steady.flatten
+    assert(reads.size == 2, s"one JDBC relation per source: $reads")
+    reads.distinct.foreach { r =>
+      assert(steady.count(_.contains(r)) == 1, s"$r read by more than one execution")
+    }
+    assert(spoolDirs(work).isEmpty, "no spool dir after a round")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the round's scrape cut is unpersisted")
+
+    // a round that crashes after publish frees its cut just the same
+    insert(db1, Seq(("m_up", 1.0, 300)))
+    intercept[RuntimeException] {
+      CollectorLoop.runRound(spark, secrets, work, 3L, failpoint = "before-advance")
+    }
+    assert(spoolDirs(work).isEmpty, "no spool dir after a crashed round")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the crashed round's scrape cut is unpersisted")
+  }
+
+  test("runOnce numbers the next round from the manifest's round=N dirs, skipping dot-dirs") {
+    val base = tempBase("graft_loop_probe")
+    val db = s"$base/src"
+    metricsDb(db, Seq(("m_up", 1.0, 100)))
+    val secrets = Seq(secret("p.example.com", db))
+    val work = s"$base/work"
+    CollectorLoop.runRound(spark, secrets, work, 1L)
+    CollectorLoop.runRound(spark, secrets, work, 3L)
+    // a crashed round's leftover staging dir is not a round
+    val staging = java.nio.file.Paths.get(s"$work/manifest/.staging_round_5")
+    java.nio.file.Files.createDirectories(staging)
+    java.nio.file.Files.write(staging.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    assert(CollectorLoop.runOnce(spark, secrets, work).head().getAs[Long]("round") == 4)
+
+    // an existing but empty manifest dir starts at round 1
+    val fresh = s"$base/fresh"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$fresh/manifest"))
+    assert(CollectorLoop.runOnce(spark, secrets, fresh).head().getAs[Long]("round") == 1)
+  }
+
+  test("registry snapshot: a steady round leaves it untouched, a churn round rewrites it") {
+    val base = tempBase("graft_loop_reg")
+    val (dbA, dbB) = (s"$base/a", s"$base/b")
+    metricsDb(dbA, Seq(("m_up", 1.0, 100)))
+    metricsDb(dbB, Seq(("m_up", 1.0, 100)))
+    val a = secret("a.example.com", dbA)
+    val work = s"$base/work"
+    def registryFiles(): Set[(String, Long, Long)] =
+      new java.io.File(s"$work/registry").listFiles().map(f =>
+        (f.getName, f.length(), f.lastModified())).toSet
+    def statuses(m: org.apache.spark.sql.DataFrame): Map[String, String] =
+      m.collect().map(r => r.getAs[String]("source_id") -> r.getAs[String]("status")).toMap
+
+    assert(statuses(CollectorLoop.runOnce(spark, Seq(a), work)) == Map("a.example.com:1527" -> "added"))
+    val written = registryFiles()
+    assert(statuses(CollectorLoop.runOnce(spark, Seq(a), work)) == Map("a.example.com:1527" -> "kept"))
+    assert(registryFiles() == written, "a steady round does not rewrite the registry")
+    assert(statuses(CollectorLoop.runOnce(spark, Seq(a), work)) == Map("a.example.com:1527" -> "kept"))
+
+    // restart: a brand-new stream query over the same workDir
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ticks = MemoryStream[Long]
+    val q = CollectorLoop.stream(ticks.toDS(), () => Seq(a), work)
+      .option("checkpointLocation", s"$base/ckpt").start()
+    try { ticks.addData(4L); q.processAllAvailable() } finally q.stop()
+    assert(spark.read.parquet(s"$work/manifest").filter(col("round") === 4)
+      .select("status").collect().map(_.getString(0)).toSeq == Seq("kept"))
+    assert(registryFiles() == written)
+
+    // churn: b enrolls, so the registry is rewritten with both sources
+    val b = secret("b.example.com", dbB)
+    assert(statuses(CollectorLoop.runOnce(spark, Seq(a, b), work)) ==
+      Map("a.example.com:1527" -> "kept", "b.example.com:1527" -> "added"))
+    assert(registryFiles() != written, "a churn round rewrites the registry")
+    assert(spark.read.parquet(s"$work/registry").select("source_id").collect()
+      .map(_.getString(0)).toSet == Set("a.example.com:1527", "b.example.com:1527"))
+    assert(statuses(CollectorLoop.runOnce(spark, Seq(a, b), work)).values.toSet == Set("kept"))
+  }
+
+  test("publish audit: a staged row count that differs from the expected count fails the round") {
+    val base = tempBase("graft_loop_audit")
+    val table = s"$base/t"
+    val e = intercept[RuntimeException] {
+      CollectorLoop.publishRound(spark, table, 1L, spark.range(0, 5, 1, 3).toDF("x"), 4L)
+    }
+    assert(e.getMessage.contains("staged 5 != expected 4"), e.getMessage)
+    assert(!new java.io.File(s"$table/round=1").exists(), "a failed audit publishes nothing")
+    CollectorLoop.publishRound(spark, table, 1L, spark.range(0, 5, 1, 3).toDF("x"), 5L)
+    CollectorLoop.publishRound(spark, table, 2L, spark.range(0).toDF("x"), 0L)
+    assert(spark.read.parquet(table).count() == 5)
+  }
+
+  test("state reads: an FS error is not a fresh workDir, it fails the round") {
+    val base = tempBase("graft_loop_fs")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.flaky.impl", classOf[FailingFs].getName)
+    conf.setBoolean("fs.flaky.impl.disable.cache", true)
+    try {
+      assert(!CollectorLoop.exists(spark, s"$base/missing"))
+      assert(CollectorLoop.exists(spark, base))
+      intercept[java.io.IOException](CollectorLoop.exists(spark, s"flaky://$base/registry"))
+      // runOnce's round probe and runRound's state reads both fail,
+      // instead of starting over at round 1 from Long.MinValue
+      intercept[java.io.IOException](CollectorLoop.runOnce(spark, Nil, s"flaky://$base/work"))
+      intercept[java.io.IOException](CollectorLoop.runRound(spark, Nil, s"flaky://$base/work", 2L))
+    } finally {
+      conf.unset("fs.flaky.impl")
+      conf.unset("fs.flaky.impl.disable.cache")
+    }
+  }
+}
+
+/** A file system whose every metadata call fails with an IO error. */
+class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("flaky:///")
+  override def exists(p: org.apache.hadoop.fs.Path) =
+    throw new java.io.IOException(s"injected: $p")
+  override def getFileStatus(p: org.apache.hadoop.fs.Path) =
+    throw new java.io.IOException(s"injected: $p")
+  override def listStatus(p: org.apache.hadoop.fs.Path) =
+    throw new java.io.IOException(s"injected: $p")
 }
