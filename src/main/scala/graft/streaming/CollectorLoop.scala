@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.sources.SourceRegistry
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The reference's continuously-running service shape, re-expressed as
   * a Structured-Streaming-driven micro-batch loop (the collector
@@ -48,30 +51,40 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *      (source, metric) — `proto.Marshal` + `snappy.Encode`. Bodies and
   *      manifest are written with the repo's own write-audit-publish
   *      discipline (stage → footer row-count audit → atomic rename into
-  *      `round=N`). The sigv4-signed HTTP POST stays out of scope (AWS
-  *      infra); the bodies parquet is the push boundary.
+  *      `round=N`): the bodies by a distributed Spark write, the
+  *      manifest's few rows by the driver. The sigv4-signed HTTP POST
+  *      stays out of scope (AWS infra); the bodies parquet is the push
+  *      boundary.
   *   5. ADVANCE, EXACTLY-ONCE — the state snapshots (registry,
   *      watermarks) advance strictly AFTER publish (the registry only
-  *      when the source set changed): a crash anywhere mid-round leaves
-  *      the watermarks unmoved, and the restarted round's publish
+  *      when the source set changed). The watermark snapshot is the
+  *      round's commit: its file's footer records the round it commits,
+  *      and [[runOnce]] runs the round after that one. A crash anywhere
+  *      before it lands leaves the watermarks and the committed round
+  *      unmoved, so the next round is the SAME round, whose publish
   *      REPLACES its own `round=N` dirs instead of appending — no
   *      double-pushed bodies, ever (spec-proven by killing the loop
-  *      between publish and advance). The in-memory cut keeps that
-  *      guarantee: a cut block cannot be recomputed, so losing one fails
-  *      the round instead of silently re-querying the sources, and the
-  *      failed round's unmoved watermarks make the next round retry the
-  *      same range. The cut is unpersisted when the round ends, crashed
-  *      or not.
+  *      between publish and advance, and by failing each step of the
+  *      snapshot replacement). The in-memory cut keeps that guarantee: a
+  *      cut block cannot be recomputed, so losing one fails the round
+  *      instead of silently re-querying the sources, and the failed
+  *      round's unmoved watermarks make the next round retry the same
+  *      range. The cut is unpersisted when the round ends, crashed or not.
   *
-  * Round state (registry snapshot, per-(source, scraper) watermarks) and outputs
-  * (manifest, bodies — both partitioned by round) live under a work
-  * directory as parquet — tiny |sources|-bounded tables, re-readable on
-  * restart, so the loop is a restartable foreachBatch pipeline rather
-  * than driver-memory state. At scale each source's scrape is a
-  * distributed (optionally split) read; nothing here collects data rows
-  * to the driver (the registry collect is config rows — the reference
-  * holds the same list in memory — and the round's stats collect has one
-  * row per published body).
+  * Round state (registry snapshot, per-(source, scraper) watermarks) and
+  * outputs (manifest, bodies — both partitioned by round) live under a
+  * work directory as parquet, re-readable on restart, so the loop is a
+  * restartable foreachBatch pipeline rather than driver-memory state.
+  * The registry, the watermarks and the manifest are tiny
+  * |sources|-bounded tables whose rows are on the driver anyway (the
+  * reference holds the same lists in memory), so the driver reads and
+  * writes them itself through parquet-hadoop ([[StateFiles]]) — no Spark
+  * job, in files `spark.read.parquet` reads like Spark's own. A snapshot
+  * is replaced by writing the new file beside the old one before
+  * deleting it, never by emptying its dir first. At scale each source's
+  * scrape is a distributed (optionally split) read and the bodies a
+  * distributed write; the only data collect is the round's stats, one
+  * row per published body.
   */
 object CollectorLoop {
 
@@ -201,49 +214,43 @@ object CollectorLoop {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** State snapshot schemas, given explicitly so no read infers them
-    * from the parquet footers. */
-  private val RegistrySchema = "source_id STRING, engine STRING"
-  private val WatermarkSchema = "source_id STRING, scraper STRING, watermark BIGINT"
-
-  /** Rows in the parquet files directly under `dir`, summed from their
-    * footers — the metadata Spark's `count()` over the dir reads, without
-    * a job. Hidden files (`_SUCCESS`, `.crc`) are skipped. */
-  private def stagedRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    fsOf(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map { st =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try reader.getRecordCount finally reader.close()
-      }.sum
-  }
+  /** One schema per collector table. The driver-side writer derives the
+    * parquet message type from it, and the NOT NULL columns are the
+    * `required` ones Spark's writer made of the Scala tuples' primitive
+    * fields. */
+  private[graft] val RegistrySchema = StructType.fromDDL("source_id STRING, engine STRING")
+  private[graft] val WatermarkSchema =
+    StructType.fromDDL("source_id STRING, scraper STRING, watermark BIGINT NOT NULL")
+  private[graft] val ManifestSchema = StructType.fromDDL(
+    "source_id STRING, engine STRING, status STRING, old_watermark BIGINT NOT NULL, " +
+      "n_new BIGINT NOT NULL, new_watermark BIGINT NOT NULL, n_failed_scrapers INT NOT NULL")
 
   /** Stage → audit → atomic publish of one round's slice of `table`:
-    * write under an invisible dot-dir, audit the staged files' row count
-    * against the expected one, then rename into `round=N`.
-    * A replayed round DELETES its own published dir first — outputs are
-    * per-round idempotent, so a crash-and-restart can never append a
-    * second copy (the `sink_write_audit_publish` discipline). */
-  private[graft] def publishRound(spark: SparkSession, table: String, round: Long,
-      df: DataFrame, expectRows: Long): Unit = {
-    val stagedPath = s"$table/.staging_round_$round"
-    df.write.mode("overwrite").parquet(stagedPath)
-    val got = stagedRowCount(spark, stagedPath)
+    * `stage` writes under an invisible dot-dir, the staged files' footer
+    * row counts are audited against the expected count, then the dir is
+    * renamed into `round=N`. A replayed round DELETES its own published
+    * dir first — outputs are per-round idempotent, so a crash-and-restart
+    * can never append a second copy (the `sink_write_audit_publish`
+    * discipline). */
+  private def publishStaged(spark: SparkSession, table: String, round: Long,
+      expectRows: Long)(stage: Path => Unit): Unit = {
+    val staged = new Path(s"$table/.staging_round_$round")
+    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(staged)) fs.delete(staged, true) // a crashed attempt's leftovers
+    stage(staged)
+    val got = StateFiles.rowCount(spark, staged)
     if (got != expectRows)
       sys.error(s"audit failed for $table round $round: staged $got != expected $expectRows")
-    val fs = fsOf(spark, table)
-    val target = new org.apache.hadoop.fs.Path(s"$table/round=$round")
+    val target = new Path(s"$table/round=$round")
     if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(stagedPath), target))
-      sys.error(s"publish rename failed: $stagedPath -> $target")
+    if (!fs.rename(staged, target))
+      sys.error(s"publish rename failed: $staged -> $target")
   }
+
+  /** [[publishStaged]] of a distributed DataFrame, staged by Spark's writer. */
+  private[graft] def publishRound(spark: SparkSession, table: String, round: Long,
+      df: DataFrame, expectRows: Long): Unit =
+    publishStaged(spark, table, round, expectRows)(p => df.write.mode("overwrite").parquet(p.toString))
 
   /** Enrolled registry for one round: id, engine, dsn + the config
     * fields [[SourceRegistry.read]] needs. */
@@ -262,7 +269,17 @@ object CollectorLoop {
     * watermark/registry snapshots move — the exact window where the old
     * append-based shape double-pushed on restart. */
   def runRound(spark: SparkSession, secrets: Seq[String], workDir: String,
-      round: Long, failpoint: String = ""): DataFrame = {
+      round: Long, failpoint: String = ""): DataFrame =
+    runRoundOn(spark, secrets, workDir, round, readWatermarks(spark, workDir), failpoint)
+
+  private def watermarkDir(workDir: String) = new Path(s"$workDir/watermarks")
+
+  private def readWatermarks(spark: SparkSession, workDir: String): Option[StateFiles.Snapshot] =
+    StateFiles.readSnapshot(spark, watermarkDir(workDir), WatermarkSchema)
+
+  /** [[runRound]] over an already-read watermark snapshot. */
+  private def runRoundOn(spark: SparkSession, secrets: Seq[String], workDir: String,
+      round: Long, wmSnapshot: Option[StateFiles.Snapshot], failpoint: String): DataFrame = {
     import spark.implicits._
 
     // 1. enumerate
@@ -272,13 +289,10 @@ object CollectorLoop {
       .collect()
 
     // 2. diff against the previous registry snapshot
-    val regPath = s"$workDir/registry"
-    val regExists = exists(spark, regPath)
-    val prev: Map[String, String] =
-      if (regExists)
-        spark.read.schema(RegistrySchema).parquet(regPath)
-          .as[(String, String)].collect().toMap
-      else Map.empty
+    val regDir = new Path(s"$workDir/registry")
+    val regSnapshot = StateFiles.readSnapshot(spark, regDir, RegistrySchema)
+    val prev: Map[String, String] = regSnapshot.toSeq
+      .flatMap(_.rows.map(r => r.getString(0) -> r.getString(1))).toMap
     val cur: Map[String, String] = enrolled
       .map(r => r.getAs[String]("source_id") -> r.getAs[String]("engine")).toMap
     val status: Map[String, String] =
@@ -292,12 +306,8 @@ object CollectorLoop {
     // shared per-source watermark advanced to max(ts_sec) across ALL
     // families would permanently skip a lagging family's late rows —
     // silent sample loss the exactly-once machinery can't see.
-    val wmPath = s"$workDir/watermarks"
-    val storedWm: Map[(String, String), Long] =
-      if (exists(spark, wmPath))
-        spark.read.schema(WatermarkSchema).parquet(wmPath).as[(String, String, Long)].collect()
-          .map { case (id, fam, w) => (id, fam) -> w }.toMap
-      else Map.empty
+    val storedWm: Map[(String, String), Long] = wmSnapshot.toSeq
+      .flatMap(_.rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))).toMap
     val failedScrapes = scala.collection.mutable.Set[(String, String)]()
     val scraped: Seq[DataFrame] = enrolled.toSeq.flatMap { r =>
       val id = r.getAs[String]("source_id")
@@ -439,64 +449,71 @@ object CollectorLoop {
         val newWm = fams.map(f => famCounts.get((id, f)).map(_._2)
           .getOrElse(storedWm.getOrElse((id, f), Long.MinValue))).max
         val nFailed = fams.count(f => failedScrapes.contains((id, f)))
-        (id, engine, st, oldWm, n, newWm, nFailed)
+        Row(id, engine, st, oldWm, n, newWm, nFailed)
       }
-      val manifestDf = manifestRows
-        .toDF("source_id", "engine", "status", "old_watermark", "n_new",
-          "new_watermark", "n_failed_scrapers")
-      publishRound(spark, s"$workDir/manifest", round, manifestDf, manifestRows.size.toLong)
+      publishStaged(spark, s"$workDir/manifest", round, manifestRows.size.toLong) { staged =>
+        StateFiles.write(spark, new Path(staged, "part-00000.snappy.parquet"), ManifestSchema,
+          manifestRows, Map.empty)
+      }
 
       if (failpoint == "before-advance")
         sys.error(s"failpoint: crash after publish, before snapshot advance (round $round)")
 
-      // 5. advance snapshots AFTER the publishes: a crash before this
-      // point leaves the watermarks unmoved and the restarted round
-      // replaces its own round=N dirs — exactly-once outputs per round.
+      // 5. advance snapshots AFTER the publishes: a crash before the
+      // watermark snapshot lands leaves it unmoved, and the restarted
+      // round replaces its own round=N dirs — exactly-once outputs per
+      // round. The watermark snapshot records the round it commits, so
+      // runOnce replays an uncommitted round instead of skipping past it.
       // An unchanged registry is not rewritten.
-      if (!regExists || cur != prev)
-        cur.toSeq.toDF("source_id", "engine").write.mode("overwrite").parquet(regPath)
+      if (regSnapshot.isEmpty || cur != prev)
+        StateFiles.writeSnapshot(spark, regDir, RegistrySchema,
+          cur.toSeq.map { case (id, engine) => Row(id, engine) }, round)
       val newWms = (storedWm ++ famCounts.map { case (k, (_, w)) => k -> w })
         .filter { case (k @ (id, _), _) => cur.contains(id) || storedWm.contains(k) }
-      newWms.toSeq.map { case ((id, fam), w) => (id, fam, w) }
-        .toDF("source_id", "scraper", "watermark")
-        .write.mode("overwrite").parquet(wmPath)
+      StateFiles.writeSnapshot(spark, watermarkDir(workDir), WatermarkSchema,
+        newWms.toSeq.map { case ((id, fam), w) => Row(id, fam, w) }, round)
 
-      manifestDf.withColumn("round", lit(round))
-        .select("round", "source_id", "engine", "status", "old_watermark",
-          "n_new", "new_watermark", "n_failed_scrapers")
+      spark.createDataFrame(manifestRows.asJava, ManifestSchema)
+        .select(lit(round).as("round"), col("*"))
     } finally cut.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
   }
 
-  /** Next round number of `workDir`: one past the largest published
-    * `manifest/round=N` dir, 1 when there is none. A listing, not a
-    * scan of every published slice; dot-dirs (a crashed round's
-    * staging) are not rounds. */
-  private def nextRound(spark: SparkSession, workDir: String): Long = {
-    val manifest = new org.apache.hadoop.fs.Path(s"$workDir/manifest")
-    val dirs =
-      try fsOf(spark, manifest.toString).listStatus(manifest).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    val RoundDir = "round=(\\d+)".r
-    dirs.filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case RoundDir(n) => n.toLong }
-      .maxOption.fold(1L)(_ + 1L)
+  /** Next round number of `workDir`: one past the round its watermark
+    * snapshot commits, 1 when there is no snapshot. A round that crashed
+    * before its snapshot landed is therefore run again, not skipped with
+    * its samples re-scraped into a new round. A snapshot written by
+    * Spark's writer records no round: then one past the largest published
+    * `manifest/round=N` dir (dot-dirs, a crashed round's staging, are not
+    * rounds). */
+  private def nextRound(spark: SparkSession, workDir: String,
+      wm: Option[StateFiles.Snapshot]): Long = wm match {
+    case None => 1L
+    case Some(StateFiles.Snapshot(_, Some(committed))) => committed + 1L
+    case Some(_) =>
+      val RoundDir = "round=(\\d+)".r
+      StateFiles.entries(spark, new Path(s"$workDir/manifest"))
+        .filter(_.isDirectory).map(_.getPath.getName)
+        .collect { case RoundDir(n) => n.toLong }
+        .maxOption.fold(1L)(_ + 1L)
   }
 
   /** LAMBDA one-shot mode — the reference's other deployment shape
     * (database-collector.go:233-268 runs one collect per invocation and
     * exits; the CDK wires it to a schedule). Executes exactly ONE
     * enumerate → diff → scrape → publish → advance round with no
-    * trigger stream: the round number is recovered from the published
-    * manifest's `round=N` dirs ([[nextRound]]), so consecutive
+    * trigger stream: the round number is recovered from the round the
+    * watermark snapshot commits ([[nextRound]]), so consecutive
     * invocations are incremental exactly like consecutive stream ticks
     * — watermarks advance, already-pushed rows never re-push, and a
     * cron/Lambda deployment IS a sequence of runOnce calls over the
     * same workDir. Returns the round's manifest. */
-  def runOnce(spark: SparkSession, secrets: Seq[String], workDir: String): DataFrame =
-    runRound(spark, secrets, workDir, nextRound(spark, workDir))
+  def runOnce(spark: SparkSession, secrets: Seq[String], workDir: String): DataFrame = {
+    val wm = readWatermarks(spark, workDir)
+    runRoundOn(spark, secrets, workDir, nextRound(spark, workDir, wm), wm, "")
+  }
 
   /** Wire the loop onto a trigger stream: each tick value is a round
     * number; `secrets` is re-evaluated per round (the reference's

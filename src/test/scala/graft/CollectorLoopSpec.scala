@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.CollectorLoop
+import graft.streaming.{CollectorLoop, StateFiles}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -573,19 +574,32 @@ class CollectorLoopSpec extends SparkTestBase {
     } finally c.close()
   }
 
-  /** The SQL executions `body` runs, as the JDBC relations each one reads. */
-  private def executions(body: => Unit): Seq[Seq[String]] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    def jdbcOf(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] =
+  /** One SQL execution: the JDBC relations it reads and the file paths
+    * it reads or writes. */
+  private final case class Execution(jdbc: Seq[String], paths: Seq[String])
+
+  /** The SQL executions `body` runs. */
+  private def executions(body: => Unit): Seq[Execution] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InsertIntoHadoopFsRelationCommand, LogicalRelation}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Execution]()
+    def of(qe: org.apache.spark.sql.execution.QueryExecution): Execution = Execution(
       qe.analyzed.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if l.relation.getClass.getSimpleName == "JDBCRelation" => l.relation.toString
-      }
+        case l: LogicalRelation if l.relation.getClass.getSimpleName == "JDBCRelation" =>
+          l.relation.toString
+      },
+      qe.analyzed.collect {
+        case w: InsertIntoHadoopFsRelationCommand => Seq(w.outputPath.toString)
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+          case _ => Nil
+        }
+      }.flatten)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        seen.add(jdbcOf(qe))
+        seen.add(of(qe))
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = seen.add(jdbcOf(qe))
+          e: Exception): Unit = seen.add(of(qe))
     }
     org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
@@ -616,15 +630,20 @@ class CollectorLoopSpec extends SparkTestBase {
       val m = CollectorLoop.runOnce(spark, secrets, work).collect()
       assert(m.map(_.getAs[Long]("n_new")).sum == 3 && m.forall(_.getAs[String]("status") == "kept"))
     }
-    // enumerate, registry read, watermark read, scrape cut, stats,
-    // bodies write, manifest write, watermark write (the registry is
-    // unchanged, so not rewritten), the returned manifest's collect
-    assert(steady.size == 9, s"SQL executions of a steady round: ${steady.size}")
-    val reads = steady.flatten
+    // enumerate, scrape cut, stats, bodies write, the returned
+    // manifest's collect: the registry, watermarks and manifest are read
+    // and written on the driver, by no execution
+    assert(steady.size == 5, s"SQL executions of a steady round: ${steady.size}")
+    val reads = steady.flatMap(_.jdbc)
     assert(reads.size == 2, s"one JDBC relation per source: $reads")
     reads.distinct.foreach { r =>
-      assert(steady.count(_.contains(r)) == 1, s"$r read by more than one execution")
+      assert(steady.count(_.jdbc.contains(r)) == 1, s"$r read by more than one execution")
     }
+    val paths = steady.flatMap(_.paths)
+    assert(paths.exists(_.contains("/bodies/")), s"the bodies write is an execution: $paths")
+    val statePaths = paths.filter(p =>
+      p.split('/').exists(Set("registry", "watermarks", "manifest")))
+    assert(statePaths.isEmpty, s"executions touching round state: $statePaths")
     assert(spoolDirs(work).isEmpty, "no spool dir after a round")
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
       "the round's scrape cut is unpersisted")
@@ -730,6 +749,174 @@ class CollectorLoopSpec extends SparkTestBase {
       conf.unset("fs.flaky.impl.disable.cache")
     }
   }
+
+  // ------------------------------------------------ driver-side state I/O
+
+  /** Footer of the first data file under `dir`: parquet schema and the
+    * Spark schema Spark's writer records. */
+  private def footerOf(dir: String): (org.apache.parquet.schema.MessageType, String) = {
+    val st = StateFiles.dataFiles(spark, new Path(dir)).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    try {
+      val m = r.getFooter.getFileMetaData
+      (m.getSchema, m.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    } finally r.close()
+  }
+
+  test("state tables written on the driver read back like the ones Spark's writer made of the same rows") {
+    val base = tempBase("graft_loop_schema")
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    def rowsOf(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    def compare(table: String, schema: org.apache.spark.sql.types.StructType,
+        sparkWritten: org.apache.spark.sql.DataFrame, rows: Seq[Row]): Unit = {
+      val (bySpark, byDriver) = (s"$base/$table-spark", s"$base/$table-driver")
+      sparkWritten.write.parquet(bySpark)
+      StateFiles.write(spark,
+        new Path(s"$byDriver/part-00000.snappy.parquet"), schema, rows, Map.empty)
+      assert(spark.read.parquet(byDriver).schema == spark.read.parquet(bySpark).schema, table)
+      assert(rowsOf(byDriver) == rowsOf(bySpark), table)
+      assert(footerOf(byDriver) == footerOf(bySpark), s"$table: parquet and Spark schema in the footer")
+      val back = StateFiles.dataFiles(spark, new Path(byDriver))
+        .flatMap(st => StateFiles.read(spark, st, schema)._1)
+      assert(back == rows, s"$table: driver-side read of the driver-written file")
+    }
+    // the same rows as Scala tuples through `toDF(...).write.parquet`
+    val reg = Seq(("a.example.com:1527", "derby"), ("b.example.com:1527", null: String))
+    compare("registry", CollectorLoop.RegistrySchema, reg.toDF("source_id", "engine"),
+      reg.map { case (a, b) => Row(a, b) })
+    val wm = Seq(("a.example.com:1527", "metrics", 220L), ("c.example.com:1527", "innodb_cmp", Long.MinValue))
+    compare("watermarks", CollectorLoop.WatermarkSchema, wm.toDF("source_id", "scraper", "watermark"),
+      wm.map { case (a, b, c) => Row(a, b, c) })
+    val man = Seq(
+      ("a.example.com:1527", "derby", "kept", 100L, 2L, 220L, 0),
+      ("c.example.com:1527", "mysql", "removed", Long.MinValue, 0L, Long.MinValue, 6))
+    compare("manifest", CollectorLoop.ManifestSchema, man.toDF("source_id", "engine", "status",
+      "old_watermark", "n_new", "new_watermark", "n_failed_scrapers"),
+      man.map(t => Row.fromTuple(t)))
+  }
+
+  test("a workDir whose snapshots Spark's writer made resumes at the right round and watermark") {
+    val base = tempBase("graft_loop_legacy")
+    val (db1, db2) = (s"$base/src1", s"$base/src2")
+    metricsDb(db1, Seq(("m_up", 1.0, 100)))
+    metricsDb(db2, Seq(("m_up", 1.0, 100), ("lat", 3.0, 110)))
+    val secrets = Seq(secret("l1.example.com", db1), secret("l2.example.com", db2))
+    val work = s"$base/work"
+    CollectorLoop.runRound(spark, secrets, work, 1L)
+    insert(db1, Seq(("m_up", 1.0, 150)))
+    CollectorLoop.runRound(spark, secrets, work, 2L)
+
+    // rewrite both snapshots the way Spark's writer left them: part
+    // files (one per local partition) with no committed round
+    import spark.implicits._
+    val reg = spark.read.parquet(s"$work/registry").as[(String, String)].collect().toSeq
+    val wm = spark.read.parquet(s"$work/watermarks").as[(String, String, Long)].collect().toSeq
+    reg.toDF("source_id", "engine").write.mode("overwrite").parquet(s"$work/registry")
+    wm.toDF("source_id", "scraper", "watermark").write.mode("overwrite").parquet(s"$work/watermarks")
+    val wmDir = new Path(s"$work/watermarks")
+    assert(StateFiles.dataFiles(spark, wmDir).size > 1)
+    assert(StateFiles.readSnapshot(spark, wmDir, CollectorLoop.WatermarkSchema)
+      .exists(_.round.isEmpty), "no committed round in a Spark-written snapshot")
+
+    insert(db1, Seq(("m_up", 1.0, 300)))
+    val m3 = CollectorLoop.runOnce(spark, secrets, work).collect()
+      .map(r => r.getAs[String]("source_id") -> r).toMap
+    assert(m3.values.map(_.getAs[Long]("round")).toSet == Set(3L), "round from the manifest listing")
+    val s1 = m3("l1.example.com:1527")
+    assert(s1.getAs[String]("status") == "kept")
+    assert(s1.getAs[Long]("old_watermark") == 150 && s1.getAs[Long]("n_new") == 1 &&
+      s1.getAs[Long]("new_watermark") == 300)
+    val s2 = m3("l2.example.com:1527")
+    assert(s2.getAs[String]("status") == "kept" && s2.getAs[Long]("n_new") == 0 &&
+      s2.getAs[Long]("new_watermark") == 110)
+
+    // the round replaced the Spark-written files by one committing round 3
+    assert(StateFiles.dataFiles(spark, wmDir).size == 1)
+    assert(StateFiles.readSnapshot(spark, wmDir, CollectorLoop.WatermarkSchema)
+      .flatMap(_.round).contains(3L))
+    assert(CollectorLoop.runOnce(spark, secrets, work).head().getAs[Long]("round") == 4)
+  }
+
+  /** Total series per scraped metric name over every published body. */
+  private def shipped(work: String): Map[String, Long] =
+    spark.read.parquet(s"$work/bodies")
+      .filter(!col("metric_name").isin("up", "scrape_samples_scraped"))
+      .groupBy("metric_name").agg(sum("n_series")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("runOnce after a crash between publish and advance replays that round: each sample ships once") {
+    val base = tempBase("graft_loop_replay")
+    val db = s"$base/src"
+    metricsDb(db, Seq(("m_up", 1.0, 100), ("lat", 2.0, 100)))
+    val secrets = Seq(secret("r.example.com", db))
+    val work = s"$base/work"
+    intercept[RuntimeException] {
+      CollectorLoop.runRound(spark, secrets, work, 1L, failpoint = "before-advance")
+    }
+    val m1 = CollectorLoop.runOnce(spark, secrets, work).head()
+    assert(m1.getAs[Long]("round") == 1, "the uncommitted round 1 runs again")
+    assert(m1.getAs[Long]("n_new") == 2)
+    val m2 = CollectorLoop.runOnce(spark, secrets, work).head()
+    assert(m2.getAs[Long]("round") == 2 && m2.getAs[Long]("n_new") == 0)
+    assert(shipped(work) == Map("lat" -> 1L, "m_up" -> 1L), "each sample ships exactly once")
+    assert(spark.read.parquet(s"$work/bodies").filter(col("metric_name").isin("lat", "m_up"))
+      .select("round").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
+  test("snapshot replacement is crash-safe: a failed write keeps the old snapshot, a failed delete the new one") {
+    val base = tempBase("graft_loop_crash")
+    val db = s"$base/src"
+    metricsDb(db, Seq(("m_up", 1.0, 100), ("lat", 2.0, 100)))
+    val secrets = Seq(secret("c.example.com", db))
+    val work = s"crashy://$base/work"
+    val wmDir = new Path(s"$base/work/watermarks")
+    def snapshot() =
+      StateFiles.readSnapshot(spark, wmDir, CollectorLoop.WatermarkSchema).get
+    def round(): org.apache.spark.sql.Row = CollectorLoop.runOnce(spark, secrets, work).head()
+    def inWatermarks(p: Path) = p.getParent.getName == "watermarks"
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.crashy.impl", classOf[CrashingFs].getName)
+    conf.setBoolean("fs.crashy.impl.disable.cache", true)
+    try {
+      assert(round().getAs[Long]("n_new") == 2)
+
+      // the new snapshot file cannot be created, then cannot be renamed
+      // into place: the round fails and the old snapshot is still read
+      for ((op, ts) <- Seq("create" -> 200L, "rename" -> 300L)) {
+        insert(db, Seq(("m_up", 1.0, ts), ("lat", 2.0, ts)))
+        CrashingFs.failOn = (o, p) => o == op && inWatermarks(p)
+        intercept[java.io.IOException](round())
+        CrashingFs.failOn = CrashingFs.never
+        val committed = snapshot()
+        assert(committed.rows.map(_.getLong(2)).toSet == Set(ts - 100), op)
+        val replay = round()
+        assert(replay.getAs[Long]("round") == committed.round.get + 1, s"$op: the round runs again")
+        assert(replay.getAs[Long]("old_watermark") == ts - 100 && replay.getAs[Long]("n_new") == 2, op)
+      }
+
+      // the old file cannot be deleted: the round commits, both files
+      // stay, and the reader takes the new one
+      insert(db, Seq(("lat", 2.0, 400L)))
+      CrashingFs.failOn = (o, p) => o == "delete" && inWatermarks(p)
+      val r4 = round()
+      CrashingFs.failOn = CrashingFs.never
+      assert(r4.getAs[Long]("round") == 4 && r4.getAs[Long]("n_new") == 1)
+      assert(StateFiles.dataFiles(spark, wmDir).size == 2)
+      assert(snapshot().round.contains(4L))
+      val r5 = round()
+      assert(r5.getAs[Long]("round") == 5 && r5.getAs[Long]("old_watermark") == 400 &&
+        r5.getAs[Long]("n_new") == 0)
+      assert(StateFiles.dataFiles(spark, wmDir).size == 1,
+        "the next replacement removes the leftover")
+    } finally {
+      CrashingFs.failOn = CrashingFs.never
+      conf.unset("fs.crashy.impl")
+      conf.unset("fs.crashy.impl.disable.cache")
+    }
+    assert(shipped(s"$base/work") == Map("m_up" -> 3L, "lat" -> 4L), "each sample ships exactly once")
+  }
 }
 
 /** A file system whose every metadata call fails with an IO error. */
@@ -741,4 +928,29 @@ class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     throw new java.io.IOException(s"injected: $p")
   override def listStatus(p: org.apache.hadoop.fs.Path) =
     throw new java.io.IOException(s"injected: $p")
+}
+
+/** A local file system that fails the create, rename or delete call
+  * [[CrashingFs.failOn]] picks with an IO error, as a crash there would. */
+class CrashingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashy:///")
+  private def check(op: String, p: Path): Unit =
+    if (CrashingFs.failOn(op, p)) throw new java.io.IOException(s"injected $op failure: $p")
+  // every create() opens its file through one of these two
+  override protected def createOutputStream(f: Path, append: Boolean) = {
+    check("create", f)
+    super.createOutputStream(f, append)
+  }
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+      permission: org.apache.hadoop.fs.permission.FsPermission) = {
+    check("create", f)
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+  override def rename(src: Path, dst: Path): Boolean = { check("rename", dst); super.rename(src, dst) }
+  override def delete(p: Path, recursive: Boolean): Boolean = { check("delete", p); super.delete(p, recursive) }
+}
+
+object CrashingFs {
+  val never: (String, Path) => Boolean = (_, _) => false
+  @volatile var failOn: (String, Path) => Boolean = never
 }
